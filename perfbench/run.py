@@ -1,6 +1,6 @@
 """Benchmark driver for the validation engine.
 
-    python3 perfbench/run.py --workload suite_audio --seed 1 --seconds 24 --trace 0
+    python3 perfbench/run.py --workload suite_audio --seed 1 --seconds 16 --trace 0
 
 Runs one closed-loop, single-client workload on ``local[<cores>]`` with the
 engine's default session settings, checks every iteration's output, and
@@ -41,6 +41,7 @@ CACHE = os.path.join(ROOT, ".perfbench_cache")
 BENCH_WORKLOADS = ("suite_audio", "suite_schema")
 #: largest run ``--seconds`` accepts: keeps every run inside the 180 s limit
 MAX_SECONDS = 60
+MIN_ITERATIONS = 2
 
 
 def _children() -> dict[int, list[int]]:
@@ -154,9 +155,13 @@ def run_untraced(wl, ctx, seconds: float, excluded: float) -> dict:
     warm_ok = wl.warm_up()
     setup_s = time.perf_counter() - T_START - excluded
 
+    # iterate while the next iteration is expected to end within
+    # ``seconds``; at least MIN_ITERATIONS, so the median has a partner
     walls, failed = [], 0
     t_meas = time.perf_counter()
-    while not walls or time.perf_counter() - t_meas < seconds:
+    while len(walls) < MIN_ITERATIONS or (
+        time.perf_counter() - t_meas + statistics.median(walls) <= seconds
+    ):
         t0 = time.perf_counter()
         try:
             ok = wl.iterate(NO_TRACE)
