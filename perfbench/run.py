@@ -41,7 +41,7 @@ CACHE = os.path.join(ROOT, ".perfbench_cache")
 BENCH_WORKLOADS = ("suite_audio", "suite_schema")
 #: largest run ``--seconds`` accepts: keeps every run inside the 180 s limit
 MAX_SECONDS = 60
-MIN_ITERATIONS = 2
+MIN_ITERATIONS, MAX_ITERATIONS = 2, 4
 
 
 def _children() -> dict[int, list[int]]:
@@ -155,12 +155,15 @@ def run_untraced(wl, ctx, seconds: float, excluded: float) -> dict:
     warm_ok = wl.warm_up()
     setup_s = time.perf_counter() - T_START - excluded
 
-    # iterate while the next iteration is expected to end within
-    # ``seconds``; at least MIN_ITERATIONS, so the median has a partner
+    # MIN_ITERATIONS to MAX_ITERATIONS timed iterations, another only while
+    # it is expected to end within ``seconds``. The JVM keeps speeding up
+    # from one iteration to the next, so the median depends on how many
+    # ran: the cap keeps that count the same from run to run
     walls, failed = [], 0
     t_meas = time.perf_counter()
     while len(walls) < MIN_ITERATIONS or (
-        time.perf_counter() - t_meas + statistics.median(walls) <= seconds
+        len(walls) < MAX_ITERATIONS
+        and time.perf_counter() - t_meas + statistics.median(walls) <= seconds
     ):
         t0 = time.perf_counter()
         try:
