@@ -300,8 +300,13 @@ def main() -> int:
 
     from workloads import WORKLOADS, Context
 
-    os.makedirs(CACHE, exist_ok=True)
     ctx = Context(ROOT, CACHE, args.seed, len(os.sched_getaffinity(0)))
+    # temporary files (Spark's block manager and shuffle files, Python's and
+    # the JVM's temp dirs) stay inside the checkout and go with the run
+    tmp = os.path.join(ctx.scratch, "tmp")
+    os.makedirs(tmp)
+    os.environ["SPARK_LOCAL_DIRS"] = os.environ["TMPDIR"] = tmp
+    os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
     wl = WORKLOADS[args.workload](ctx)
     t0 = time.perf_counter()
     wl.build()
