@@ -1,7 +1,8 @@
 """Spark-free A/B harness for the audio decode kernel.
 
-Reads a fixed sample of fixture clips with pyarrow and times, best of N,
-the pieces of ``engine.audio.invariant_batches`` on one core:
+Reads a fixed sample of ``SAMPLE_CLIPS`` fixture clips with pyarrow and
+times, best of ``REPS``, the pieces of ``engine.audio.invariant_batches``
+on one core:
 
 * ``audio.kernel_ms_per_clip.<codec>``: the whole batch body, per codec;
 * ``flac.parse_ms_per_clip``: ``engine.flac.parse`` on native FLAC clips;
@@ -12,9 +13,10 @@ the pieces of ``engine.audio.invariant_batches`` on one core:
   clip;
 * ``audio.snr_ms_per_clip``: ``audio.snr_db`` on decoded clips.
 
-Standalone use (after one benchmark run has built a fixture)::
+Standalone use (after one benchmark run has built a fixture), with the same
+sample and repetitions as the traced run, so the numbers compare::
 
-    python3 perfbench/kernel.py --clips-dir .perfbench_cache/<fixture>/clips --clips 4096 --reps 5
+    python3 perfbench/kernel.py --clips-dir .perfbench_cache/<fixture>/clips
 """
 
 from __future__ import annotations
@@ -34,29 +36,33 @@ import pyarrow.parquet as pq
 CODECS = ("pcm_s16le", "flac", "opus", "mp3")
 #: rows per Arrow batch, the engine's default ``maxRecordsPerBatch``
 BATCH_ROWS = 2048
+#: clips in the sample and repetitions per timing: at 512 x 3 the harness
+#: takes about 4 s, which the traced run's 180 s limit can hold
+SAMPLE_CLIPS = 512
+REPS = 3
 
 
-def load_sample(clips_dir: str, n: int) -> pa.Table:
-    """The first ``n`` rows of the fixture, in file order, with the
+def load_sample(clips_dir: str) -> pa.Table:
+    """The first ``SAMPLE_CLIPS`` rows of the fixture, in file order, with the
     ``bucket_id`` column the batch body passes through."""
     files = sorted(glob.glob(os.path.join(clips_dir, "*.parquet")))
     t = pa.concat_tables(
         pq.read_table(f, columns=["clip_id", "bytes", "sr_hz", "dur_ms", "codec"])
         for f in files
-    ).slice(0, n)
+    ).slice(0, SAMPLE_CLIPS)
     return t.append_column("bucket_id", pa.array(np.zeros(t.num_rows, np.int32)))
 
 
-def _best(fn, reps: int) -> float:
+def _best(fn) -> float:
     best = float("inf")
-    for _ in range(reps):
+    for _ in range(REPS):
         t0 = time.perf_counter()
         fn()
         best = min(best, time.perf_counter() - t0)
     return best
 
 
-def measure(sample: pa.Table, reps: int) -> dict[str, float]:
+def measure(sample: pa.Table) -> dict[str, float]:
     from engine import audio, flac, oggcrc
 
     expected = audio.FixtureExpected()
@@ -71,7 +77,7 @@ def measure(sample: pa.Table, reps: int) -> dict[str, float]:
                 pass
 
         out[f"audio.kernel_ms_per_clip.{codec}"] = (
-            1e3 * _best(run_batches, reps) / max(sub.num_rows, 1)
+            1e3 * _best(run_batches) / max(sub.num_rows, 1)
         )
 
     blobs = sample["bytes"].to_pylist()
@@ -85,7 +91,7 @@ def measure(sample: pa.Table, reps: int) -> dict[str, float]:
             except ValueError:
                 pass
 
-    out["flac.parse_ms_per_clip"] = 1e3 * _best(parse_all, reps) / max(len(native), 1)
+    out["flac.parse_ms_per_clip"] = 1e3 * _best(parse_all) / max(len(native), 1)
 
     # chunks each clip hands to the batched folds (collected untimed)
     frames, pages, with_chunks = [], [], 0
@@ -115,7 +121,7 @@ def measure(sample: pa.Table, reps: int) -> dict[str, float]:
         fold(frames, flac.crc16_many)
         fold(pages, oggcrc.crc32_many)
 
-    out["crc.fold_ms_per_clip"] = 1e3 * _best(fold_all, reps) / max(with_chunks, 1)
+    out["crc.fold_ms_per_clip"] = 1e3 * _best(fold_all) / max(with_chunks, 1)
 
     ids = sample["clip_id"].to_pylist()
     srs = sample["sr_hz"].to_numpy(zero_copy_only=False)
@@ -126,7 +132,7 @@ def measure(sample: pa.Table, reps: int) -> dict[str, float]:
         for j in range(len(ids)):
             row(j)
 
-    out["audio.expected_ms_per_clip"] = 1e3 * _best(expect_all, reps) / max(len(ids), 1)
+    out["audio.expected_ms_per_clip"] = 1e3 * _best(expect_all) / max(len(ids), 1)
 
     row = expected.prepare(ids, srs, durs, codecs)
     pairs = []
@@ -142,20 +148,18 @@ def measure(sample: pa.Table, reps: int) -> dict[str, float]:
         for e, a in pairs:
             audio.snr_db(e, a)
 
-    out["audio.snr_ms_per_clip"] = 1e3 * _best(snr_all, reps) / max(len(pairs), 1)
+    out["audio.snr_ms_per_clip"] = 1e3 * _best(snr_all) / max(len(pairs), 1)
     return out
 
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--clips-dir", required=True, help="a fixture's clips/ directory")
-    ap.add_argument("--clips", type=int, default=4096)
-    ap.add_argument("--reps", type=int, default=5)
     args = ap.parse_args()
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    sample = load_sample(args.clips_dir, args.clips)
-    res = measure(sample, args.reps)
-    print(json.dumps({"clips": sample.num_rows, "reps": args.reps,
+    sample = load_sample(args.clips_dir)
+    res = measure(sample)
+    print(json.dumps({"clips": sample.num_rows, "reps": REPS,
                       **{k: round(v, 4) for k, v in res.items()}}))
     return 0
 

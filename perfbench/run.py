@@ -41,7 +41,6 @@ CACHE = os.path.join(ROOT, ".perfbench_cache")
 BENCH_WORKLOADS = ("suite_audio", "suite_schema")
 #: largest run ``--seconds`` accepts: keeps every run inside the 180 s limit
 MAX_SECONDS = 60
-MIN_ITERATIONS, MAX_ITERATIONS = 2, 4
 
 
 def _children() -> dict[int, list[int]]:
@@ -155,16 +154,11 @@ def run_untraced(wl, ctx, seconds: float, excluded: float) -> dict:
     warm_ok = wl.warm_up()
     setup_s = time.perf_counter() - T_START - excluded
 
-    # MIN_ITERATIONS to MAX_ITERATIONS timed iterations, another only while
-    # it is expected to end within ``seconds``. The JVM keeps speeding up
-    # from one iteration to the next, so the median depends on how many
-    # ran: the cap keeps that count the same from run to run
+    # a fixed number of timed iterations for the workload and ``seconds``:
+    # the JVM keeps speeding up from one iteration to the next, so a count
+    # that followed the host's speed would move the median with it
     walls, failed = [], 0
-    t_meas = time.perf_counter()
-    while len(walls) < MIN_ITERATIONS or (
-        len(walls) < MAX_ITERATIONS
-        and time.perf_counter() - t_meas + statistics.median(walls) <= seconds
-    ):
+    for _ in range(wl.timed_iterations(seconds)):
         t0 = time.perf_counter()
         try:
             ok = wl.iterate(NO_TRACE)
@@ -249,7 +243,7 @@ def run_traced(wl, ctx) -> dict:
 
     suite = next(w for w in order if w.name == "suite_audio")
     t0 = time.perf_counter()
-    metrics.update(kernel.measure(kernel.load_sample(suite.clips_dir, 512), reps=3))
+    metrics.update(kernel.measure(kernel.load_sample(suite.clips_dir)))
     metrics["kernel.harness_s"] = time.perf_counter() - t0
     stop_spark(ctx.spark)
 
@@ -324,14 +318,15 @@ def main() -> int:
         shutil.rmtree(ctx.scratch, ignore_errors=True)
         reap()
 
-    units = {}
-    for k in result["metrics"]:
-        units[k] = (
-            "MB" if k.endswith("_mb") else "ms" if "_ms_" in k else
-            "1/s" if k.endswith("_per_s") else "s" if k.endswith("_s") else
-            "ratio" if k.endswith("_frac") else "count"
-        )
-    result["metrics"] = {k: {"value": v, "unit": units[k]} for k, v in result["metrics"].items()}
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    declared = {m["name"]: m["unit"] for m in spec["per_layer" if args.trace else "end_to_end"]}
+    if set(result["metrics"]) != set(declared):
+        print(f"perfbench: metrics {sorted(set(result['metrics']) ^ set(declared))} "
+              "are emitted or declared in BENCHMARK.json but not both", file=sys.stderr)
+        return 1
+    result["metrics"] = {k: {"value": v, "unit": declared[k]}
+                         for k, v in result["metrics"].items()}
     print(json.dumps(result))
     return 0
 

@@ -22,20 +22,13 @@ import statistics
 import sys
 
 import inputs
+from bench import BENCH_QUERIES
 
 #: clips per seed window; rows add the window's planted duplicates
 N_CLIPS = 4000
 #: leaf-table rows (the sf0.01 test tables' sizes)
 LEAF_ROWS = dict(lineitem=60000, orders=15000, part=2000, events=10000,
                  documents=500, embeddings=500)
-#: bench.py's BENCH_QUERIES, so leaf series stay comparable with it
-BENCH_QUERIES = (
-    "suite_verdicts_lineitem", "q1_pricing_summary", "stats_lineitem",
-    "quantile_threshold_events", "rolling_zscore_events", "window_lag_delta",
-    "topk_users_by_value", "minhash_lsh_pairs", "simhash_documents",
-    "ann_cosine_topk", "winnow_fingerprints_documents", "ewma_residual_events",
-    "train_split_stats", "embedding_near_dup_pairs", "kde_threshold_pipeline",
-)
 CODECS = ("pcm_s16le", "flac", "opus", "mp3", "wma", "null")
 DECODE_ERRORS = ("codec_decoder_missing", "bad_flac_header", "bad_flac_frame",
                  "bad_ogg_page", "bad_opus_packet", "bad_mp3_frame",
@@ -66,9 +59,16 @@ class ClipFixture:
     """Base of the clip workloads: the seed's window of the fixture."""
 
     with_audio = False
+    #: nominal seconds per timed iteration on the 4-core reference host
+    iteration_s = 8.0
 
     def __init__(self, ctx: Context):
         self.ctx = ctx
+
+    def timed_iterations(self, seconds: float) -> int:
+        """How many iterations a ``seconds``-long run times. It depends on
+        ``seconds`` and the workload only, not on how fast the host is."""
+        return max(1, round(seconds / self.iteration_s))
 
     def build(self) -> None:
         c = self.ctx
@@ -184,6 +184,7 @@ class SuiteSchema(SuiteAudio):
 
     name = "suite_schema"
     with_audio = False
+    iteration_s = 3.0
 
     def layers(self, tracer, wall: float) -> dict[str, float]:
         return self._iteration_metrics(tracer, wall, "schema", "schema.plan_s")
