@@ -42,15 +42,39 @@ SAMPLE_CLIPS = 512
 REPS = 3
 
 
-def load_sample(clips_dir: str) -> pa.Table:
-    """The first ``SAMPLE_CLIPS`` rows of the fixture, in file order, with the
-    ``bucket_id`` column the batch body passes through."""
-    files = sorted(glob.glob(os.path.join(clips_dir, "*.parquet")))
+def clip_files(clips_dir: str) -> list[str]:
+    return sorted(glob.glob(os.path.join(clips_dir, "*.parquet")))
+
+
+def read_clips(files: list[str]) -> pa.Table:
+    """The rows of fixture files, in order, with the ``bucket_id`` column
+    the batch body passes through."""
     t = pa.concat_tables(
         pq.read_table(f, columns=["clip_id", "bytes", "sr_hz", "dur_ms", "codec"])
         for f in files
-    ).slice(0, SAMPLE_CLIPS)
+    )
     return t.append_column("bucket_id", pa.array(np.zeros(t.num_rows, np.int32)))
+
+
+def load_sample(clips_dir: str) -> pa.Table:
+    """The first ``SAMPLE_CLIPS`` rows of the fixture."""
+    return read_clips(clip_files(clips_dir)).slice(0, SAMPLE_CLIPS)
+
+
+def invariant_counts(path: str) -> tuple[int, dict[str, int]]:
+    """``audio.invariant_batches`` over one fixture file: its row count and
+    how many rows fail ``pcm_ok`` and ``meta_sr_ok`` or have a null
+    payload (``bytes_null``)."""
+    from engine import audio
+
+    batches = read_clips([path]).to_batches(max_chunksize=BATCH_ROWS)
+    rows, bad = 0, dict.fromkeys(("pcm_ok", "meta_sr_ok", "bytes_null"), 0)
+    for rb in audio.invariant_batches(batches, audio.FixtureExpected(), audio.SNR_DB_MIN):
+        rows += rb.num_rows
+        for flag in bad:
+            failed = rb.column(flag) if flag == "bytes_null" else pc.invert(rb.column(flag))
+            bad[flag] += pc.sum(failed).as_py() or 0
+    return rows, bad
 
 
 def _best(fn) -> float:

@@ -1,6 +1,6 @@
 """Benchmark driver for the validation engine.
 
-    python3 perfbench/run.py --workload suite_audio --seed 1 --seconds 16 --trace 0
+    python3 perfbench/run.py --workload suite_audio --seed 1 --seconds 24 --trace 0
 
 Runs one closed-loop, single-client workload on ``local[<cores>]`` with the
 engine's default session settings, checks every iteration's output, and
@@ -36,9 +36,9 @@ import traceback  # noqa: E402
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 CACHE = os.path.join(ROOT, ".perfbench_cache")
-#: the timed workloads; ``resume_schema`` and ``query_leaves`` run in the
-#: traced run only (see workloads.py)
-BENCH_WORKLOADS = ("suite_audio", "suite_schema")
+#: the timed workloads; ``suite_schema``, ``resume_schema`` and
+#: ``query_leaves`` run in the traced run only (see workloads.py)
+BENCH_WORKLOADS = ("suite_audio", "audio_kernel")
 #: largest run ``--seconds`` accepts: keeps every run inside the 180 s limit
 MAX_SECONDS = 60
 
@@ -146,7 +146,8 @@ def reap() -> None:
 def run_untraced(wl, ctx, seconds: float, excluded: float) -> dict:
     from workloads import NO_TRACE
 
-    ctx.spark = start_spark(ctx.cores)
+    if wl.needs_spark:
+        ctx.spark = start_spark(ctx.cores)
     wl.open(ctx.spark)
     t0 = time.perf_counter()
     wl.check_setup()
@@ -167,7 +168,9 @@ def run_untraced(wl, ctx, seconds: float, excluded: float) -> dict:
             ok = False
         walls.append(time.perf_counter() - t0)
         failed += not ok
-    stop_spark(ctx.spark)
+    wl.close()
+    if ctx.spark is not None:
+        stop_spark(ctx.spark)
     return {
         "correct": warm_ok and failed == 0,
         "attempted": len(walls),
@@ -182,10 +185,12 @@ def run_untraced(wl, ctx, seconds: float, excluded: float) -> dict:
 
 def run_traced(wl, ctx) -> dict:
     """Per-layer numbers. Every per-layer metric is emitted whatever the
-    workload: the selected workload runs warm-up, one traced and one plain
-    iteration (their difference is the tracing overhead); the other
+    workload: the selected workload (``suite_audio`` in place of the
+    Spark-free ``audio_kernel``) runs warm-up, one traced and one plain
+    iteration (their difference is the tracing overhead); the other Spark
     workloads then run one traced iteration each, without a warm-up of
-    their own. Spans go to ``.perfbench_cache/trace-<workload>-<seed>.jsonl``."""
+    their own, and the kernel harness runs last. Spans go to
+    ``.perfbench_cache/trace-<workload>-<seed>.jsonl``."""
     import kernel
     import tracing
     from workloads import NO_TRACE, WORKLOADS
@@ -200,9 +205,12 @@ def run_traced(wl, ctx) -> dict:
     metrics = {"session.get_spark_s": time.perf_counter() - t0}
     tracer = tracing.Tracer(ctx.spark, f"{wl.name}-{ctx.seed}")
 
-    order = [wl] + [WORKLOADS[n](ctx) for n in WORKLOADS if n != wl.name]
-    for w in order[1:]:
-        w.build()
+    lead = wl if wl.needs_spark else WORKLOADS["suite_audio"](ctx)
+    order = [lead] + [w(ctx) for n, w in WORKLOADS.items()
+                      if n != lead.name and w.needs_spark]
+    for w in order:
+        if w is not wl:
+            w.build()
     tally = {"attempted": 0, "failed": 0}
 
     def attempt(fn):
@@ -220,13 +228,13 @@ def run_traced(wl, ctx) -> dict:
     for w in order:
         w.open(ctx.spark)
         w.check_setup()
-        if w is wl:
+        if w is lead:
             attempt(w.warm_up)
         t0 = time.perf_counter()
         with tracer.span(w.name):
             attempt(lambda: w.iterate(tracer))
         wall = time.perf_counter() - t0
-        if w is wl:
+        if w is lead:
             # plain iteration AFTER the traced one: the JVM still speeds up
             # from one iteration to the next, so the difference is an upper
             # bound on what spans and job descriptions cost

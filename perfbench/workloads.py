@@ -6,22 +6,25 @@ and ``NO_TRACE`` otherwise, so both runs make the same calls.
 ``layers(tracer, wall)`` (traced run only) makes any extra per-layer calls
 and returns the workload's per-layer metrics.
 
-``suite_audio`` and ``suite_schema`` are the timed workloads.
-``resume_schema`` and ``query_leaves`` run once per traced run, for their
-per-layer numbers only.
+``suite_audio`` and ``audio_kernel`` are the timed workloads.
+``suite_schema``, ``resume_schema`` and ``query_leaves`` run once per
+traced run, for their per-layer numbers only.
 """
 
 from __future__ import annotations
 
 import contextlib
+import gc
 import math
 import os
 import random
 import shutil
 import statistics
 import sys
+from multiprocessing import get_context
 
 import inputs
+import kernel
 from bench import BENCH_QUERIES
 
 #: clips per seed window; rows add the window's planted duplicates
@@ -59,6 +62,8 @@ class ClipFixture:
     """Base of the clip workloads: the seed's window of the fixture."""
 
     with_audio = False
+    #: whether the workload runs on a Spark session
+    needs_spark = True
     #: nominal seconds per timed iteration on the 4-core reference host
     iteration_s = 8.0
 
@@ -90,6 +95,9 @@ class ClipFixture:
         """One untimed iteration: fills the page cache, starts the Python
         workers and lets the JVM compile the hot paths."""
         return self.iterate(NO_TRACE)
+
+    def close(self) -> None:
+        pass
 
 
 class SuiteAudio(ClipFixture):
@@ -184,10 +192,50 @@ class SuiteSchema(SuiteAudio):
 
     name = "suite_schema"
     with_audio = False
-    iteration_s = 3.0
 
     def layers(self, tracer, wall: float) -> dict[str, float]:
         return self._iteration_metrics(tracer, wall, "schema", "schema.plan_s")
+
+
+class AudioKernel(ClipFixture):
+    """The audio decode kernel without Spark: ``audio.invariant_batches``,
+    the body of the audio pass's ``mapInArrow``, over the seed's whole
+    window, one fixture file per task on a pool of one process per core.
+    The failing flags must count what the closed form expects of
+    ``pcm_snr_invariant``, ``container_sr_consistency`` and
+    ``bytes_not_null``."""
+
+    name = "audio_kernel"
+    with_audio = True
+    needs_spark = False
+    iteration_s = 2.0
+    FLAGS = {"pcm_ok": "pcm_snr_invariant", "meta_sr_ok": "container_sr_consistency",
+             "bytes_null": "bytes_not_null"}
+
+    def open(self, spark) -> None:
+        self.files = kernel.clip_files(self.clips_dir)
+        self.pool = get_context("spawn").Pool(self.ctx.cores)
+
+    def iterate(self, tracer) -> bool:
+        rows, bad = 0, dict.fromkeys(self.FLAGS.values(), 0)
+        for n, counts in self.pool.imap_unordered(kernel.invariant_counts, self.files):
+            rows += n
+            for flag, name in self.FLAGS.items():
+                bad[name] += counts[flag]
+        want = {name: self.expected[name][0] for name in bad}
+        if bad != want or rows != self.rows:
+            _log(f"audio_kernel: {rows} rows with violations {bad}, "
+                 f"closed form {self.rows} rows with {want}")
+            return False
+        return True
+
+    def close(self) -> None:
+        self.pool.close()
+        self.pool.join()
+        # free the pool's semaphores now, while the process that tracks
+        # them still runs (the run stops every child process before exit)
+        del self.pool
+        gc.collect()
 
 
 class ResumeSchema(ClipFixture):
@@ -287,6 +335,7 @@ class QueryLeaves:
     the tables and permutes leaf order."""
 
     name = "query_leaves"
+    needs_spark = True
 
     def __init__(self, ctx: Context):
         self.ctx = ctx
@@ -348,4 +397,5 @@ class QueryLeaves:
 
 
 #: timed workloads first, then the ones measured in the traced run only
-WORKLOADS = {w.name: w for w in (SuiteAudio, SuiteSchema, ResumeSchema, QueryLeaves)}
+WORKLOADS = {w.name: w for w in (SuiteAudio, AudioKernel, SuiteSchema, ResumeSchema,
+                                  QueryLeaves)}
