@@ -3,7 +3,8 @@
     python3 perfbench/run.py --workload suite_audio --seed 1 --seconds 24 --trace 0
 
 Runs one closed-loop, single-client workload on ``local[<cores>]`` with the
-engine's default session settings, checks every iteration's output, and
+engine's default session settings (``audio_kernel``: on a pool of one
+process per core, without Spark), checks every iteration's output, and
 prints one JSON object as the last line of standard output:
 ``{"correct", "attempted", "failed", "metrics"}``. With ``--trace 0`` the
 metrics are the end-to-end ones (``setup_s``, ``wall_s``, ``clips_per_s``);
