@@ -1,9 +1,9 @@
 """Benchmark driver for the validation engine.
 
-    python3 perfbench/run.py --workload suite_audio --seed 1 --seconds 24 --trace 0
+    python3 perfbench/run.py --workload suite_audio --seed 1 --seconds 28 --trace 0
 
-Runs one closed-loop, single-client workload on ``local[<cores>]`` with the
-engine's default session settings (``audio_kernel``: on a pool of one
+Runs one closed-loop, single-client workload on ``local[<cores>/2]`` with
+the engine's default session settings (``audio_kernel``: on a pool of one
 process per core, without Spark), checks every iteration's output, and
 prints one JSON object as the last line of standard output:
 ``{"correct", "attempted", "failed", "metrics"}``. With ``--trace 0`` the
@@ -144,11 +144,16 @@ def reap() -> None:
                 time.sleep(0.05)
 
 
+def _log_walls(name: str, setup_s: float, walls: list[float]) -> None:
+    print(f"perfbench: {name} setup {setup_s:.2f} s, iterations "
+          + " ".join(f"{w:.2f}" for w in walls) + " s", file=sys.stderr, flush=True)
+
+
 def run_untraced(wl, ctx, seconds: float, excluded: float) -> dict:
     from workloads import NO_TRACE
 
     if wl.needs_spark:
-        ctx.spark = start_spark(ctx.cores)
+        ctx.spark = start_spark(ctx.spark_cores)
     wl.open(ctx.spark)
     t0 = time.perf_counter()
     wl.check_setup()
@@ -169,6 +174,7 @@ def run_untraced(wl, ctx, seconds: float, excluded: float) -> dict:
             ok = False
         walls.append(time.perf_counter() - t0)
         failed += not ok
+    _log_walls(wl.name, setup_s, walls)
     wl.close()
     if ctx.spark is not None:
         stop_spark(ctx.spark)
@@ -202,7 +208,7 @@ def run_traced(wl, ctx) -> dict:
              "spark.eventLog.dir": "file://" + log_dir,
              "spark.eventLog.compress": "false"}
     t0 = time.perf_counter()
-    ctx.spark = start_spark(ctx.cores, extra)
+    ctx.spark = start_spark(ctx.spark_cores, extra)
     metrics = {"session.get_spark_s": time.perf_counter() - t0}
     tracer = tracing.Tracer(ctx.spark, f"{wl.name}-{ctx.seed}")
 
@@ -230,7 +236,9 @@ def run_traced(wl, ctx) -> dict:
         w.open(ctx.spark)
         w.check_setup()
         if w is lead:
-            attempt(w.warm_up)
+            # one warm-up only: three would push the traced run, which
+            # also runs every other layer, toward the 180 s run limit
+            attempt(lambda: w.warm_up(1))
         t0 = time.perf_counter()
         with tracer.span(w.name):
             attempt(lambda: w.iterate(tracer))

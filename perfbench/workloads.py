@@ -54,6 +54,11 @@ def _log(msg: str) -> None:
 class Context:
     def __init__(self, root: str, cache: str, seed: int, cores: int):
         self.root, self.cache, self.seed, self.cores = root, cache, seed, cores
+        # Spark runs tasks on half the cores: the driver JVM's JIT compiler
+        # threads stay busy for ten or more iterations (2-15 CPU-seconds
+        # each), and with a task slot on every core they slowed the task
+        # waves by a different amount in each JVM
+        self.spark_cores = max(1, cores // 2)
         self.scratch = os.path.join(cache, f"run-{os.getpid()}")
         self.spark = None
 
@@ -65,7 +70,9 @@ class ClipFixture:
     #: whether the workload runs on a Spark session
     needs_spark = True
     #: nominal seconds per timed iteration on the 4-core reference host
-    iteration_s = 8.0
+    iteration_s = 7.0
+    #: untimed iterations before the timed ones
+    warm_up_iterations = 3
 
     def __init__(self, ctx: Context):
         self.ctx = ctx
@@ -91,10 +98,13 @@ class ClipFixture:
         )
         self.rows = next(iter(self.expected.values()))[1]
 
-    def warm_up(self) -> bool:
-        """One untimed iteration: fills the page cache, starts the Python
-        workers and lets the JVM compile the hot paths."""
-        return self.iterate(NO_TRACE)
+    def warm_up(self, n: int | None = None) -> bool:
+        """``n`` untimed iterations (default ``warm_up_iterations``): they
+        fill the page cache, start the Python workers and let the JVM
+        compile the hot paths. The first takes about three times as long as
+        a timed one, and the next two are still 10-40% slower."""
+        n = self.warm_up_iterations if n is None else n
+        return all([self.iterate(NO_TRACE) for _ in range(n)])
 
     def close(self) -> None:
         pass
@@ -209,6 +219,7 @@ class AudioKernel(ClipFixture):
     with_audio = True
     needs_spark = False
     iteration_s = 2.0
+    warm_up_iterations = 1
     FLAGS = {"pcm_ok": "pcm_snr_invariant", "meta_sr_ok": "container_sr_consistency",
              "bytes_null": "bytes_not_null"}
 
